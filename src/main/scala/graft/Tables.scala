@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit, unix_micros}
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
+import graft.util.SessionMemo
+
 /** Parquet readers for the driver corpus (TESTDATA.md / FIXTURES.md §B).
   *
   * Scale note: these are plain `spark.read.parquet` scans so Catalyst can
@@ -35,108 +37,13 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** DataFrame (= analyzed plan) cache per (session, dir, table): building
-    * a parquet DataFrame lists the directory and reads footers for schema
-    * inference — ~0.1-0.3 s per call that Verify/Bench would otherwise pay
-    * ~200× across the registry. Plans are immutable, so reuse is safe. The
-    * session key is a random UUID minted per session — unlike an identity
-    * hash, it can never ALIAS between a collected session and a new one in
-    * a long-lived JVM (the r11 correctness hazard this fixes: hash reuse
-    * after GC handing session B a plan bound to dead session A). Retention
-    * is deliberate and unchanged from the identity-hash version: cached
-    * DataFrames reference their session, so entries live for the JVM —
-    * bounded by (sessions ever created × tables), a few KB of plan each in
-    * this harness's 1-2-session processes.
+  /** Analyzed plan per (session, dir, table), held in a [[SessionMemo]]:
+    * building a parquet DataFrame lists the directory and reads footers
+    * for schema inference — ~0.1-0.3 s per call that Verify/Bench would
+    * otherwise pay ~200× across the registry. Plans are immutable, so
+    * reuse is safe; none is `.cache()`d, so eviction unpersists nothing.
     */
-  private val planCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), DataFrame]()
-
-  private val sessionIds: java.util.Map[SparkSession, String] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, String]())
-
-  /** UUID → weak session ref, for liveness checks at prune time. The weak
-    * ref never pins the session; a UUID whose session is GC'd or whose
-    * context is stopped is dead and its cache entries are evictable.
-    */
-  private val sessionRefs = new java.util.concurrent.ConcurrentHashMap[
-    String, java.lang.ref.WeakReference[SparkSession]]()
-
-  /** Per-UUID eviction callbacks registered by the DataFrame caches
-    * (tokenCache / simhashPairCache / joinFamilyCache / planCache):
-    * without eviction those maps strongly retain .cache()'d DataFrames —
-    * which reference their session — for the JVM lifetime, so a JVM that
-    * cycles many sessions (a long test harness) pins every stopped
-    * session's blocks forever. Sweeps run lazily when a NEW session mints
-    * its key: exactly the moment a cycling JVM starts growing the maps.
-    */
-  private val evictors =
-    new java.util.concurrent.CopyOnWriteArrayList[String => Unit]()
-
-  private[graft] def registerEvictor(f: String => Unit): Unit =
-    evictors.add(f)
-
-  private def pruneDeadSessions(): Unit = {
-    val it = sessionRefs.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val s = e.getValue.get()
-      if (s == null || s.sparkContext.isStopped) {
-        it.remove()
-        evictors.forEach(f =>
-          try f(e.getKey) catch { case scala.util.control.NonFatal(_) => () })
-      }
-    }
-  }
-
-  /** Per-session UUID via a weak identity map — the ONE place that may
-    * key on a live SparkSession: the String value holds no reference back
-    * to the session, so the weak key actually works (a map whose VALUES
-    * are DataFrames would pin its session keys forever — DataFrames
-    * reference their session). Caches elsewhere key on this UUID instead,
-    * and register an evictor above so dead sessions' entries are swept.
-    */
-  private[graft] def sessionKey(spark: SparkSession): String = {
-    val existing = sessionIds.get(spark)
-    if (existing != null) existing
-    else {
-      val id = sessionIds.computeIfAbsent(spark,
-        _ => java.util.UUID.randomUUID().toString)
-      sessionRefs.putIfAbsent(id, new java.lang.ref.WeakReference(spark))
-      // prune OUTSIDE the synchronizedMap monitor: evictors take cache
-      // bin locks, and a thread inside a cache's computeIfAbsent holds
-      // that bin lock while re-entering sessionKey for the map mutex —
-      // pruning under the mutex would be a lock-order inversion
-      // (mutex→bin here, bin→mutex there) that deadlocks the exact
-      // multi-session harness the eviction exists for. Racing prunes
-      // are harmless: the maps are concurrent and eviction idempotent.
-      pruneDeadSessions()
-      id
-    }
-  }
-
-  // registered here, after `evictors` is initialized (object-init order)
-  registerEvictor(uuid => planCache.keySet.removeIf(_._1 == uuid))
-
-  /** Remove + best-effort-unpersist every `uuid`-keyed entry of a
-    * DataFrame-valued cache map — the shared shape of the evictors the
-    * operator objects register (their keys are tuples whose _1 is the
-    * session UUID; values are `.cache()`'d DataFrames, possibly tupled).
-    */
-  private[graft] def evictSessionEntries[K <: Product, V](
-      map: java.util.concurrent.ConcurrentHashMap[K, V], uuid: String)(
-      dfs: V => Seq[DataFrame]): Unit = {
-    val it = map.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.productElement(0) == uuid) {
-        it.remove()
-        dfs(e.getValue).foreach(df =>
-          try df.unpersist(blocking = false)
-          catch { case scala.util.control.NonFatal(_) => () })
-      }
-    }
-  }
+  private val plans = new SessionMemo[(String, String), DataFrame](_ => Nil)
 
   /** Normalize an `events` scan to the canonical epoch-nanos LongType `ts`
     * (see the object Scaladoc). A corpus whose `ts` is already integral —
@@ -212,12 +119,10 @@ object Tables {
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    planCache.computeIfAbsent(
-      (sessionKey(spark), sfDir, name),
-      _ => {
-        val df = spark.read.parquet(s"$sfDir/$name.parquet")
-        if (name == "events") canonicalEventTime(df) else df
-      })
+    plans(spark, (sfDir, name)) {
+      val df = spark.read.parquet(s"$sfDir/$name.parquet")
+      if (name == "events") canonicalEventTime(df) else df
+    }
   }
 
   /** Register every corpus table as a temp view, for spark.sql operators. */

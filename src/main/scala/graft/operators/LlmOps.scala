@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.{Q, Tables}
 import graft.util.Checkpoints.Truncate
+import graft.util.SessionMemo
 
 /** SURVEY §2.8 — LLM-training-data pipeline operators (all EXT;
   * `BASELINE.json` north_star: dedup, similarity search, multimodal columns,
@@ -27,24 +28,15 @@ import graft.util.Checkpoints.Truncate
   */
 object LlmOps {
 
-  /** Distinct (doc_id, token) pairs — the inverted-index building block. */
-  private val tokenCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (DataFrame, DataFrame)]()
+  /** Distinct (doc_id, token) pairs + minhash signatures, both `.cache()`d. */
+  private val tokenMemo = new SessionMemo[String, (DataFrame, DataFrame)](
+    { case (toks, sigs) => Seq(toks, sigs) })
 
-  Tables.registerEvictor(uuid =>
-    Tables.evictSessionEntries(tokenCache, uuid) { case (a, b) => Seq(a, b) })
+  // localCheckpoint()ed, not cached: nothing for eviction to unpersist
+  private val shardPairMemo = new SessionMemo[String, DataFrame](_ => Nil)
 
-  private val shardPairCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  Tables.registerEvictor(uuid =>
-    Tables.evictSessionEntries(shardPairCache, uuid)(df => Seq(df)))
-
-  private val anchorCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  Tables.registerEvictor(uuid =>
-    Tables.evictSessionEntries(anchorCache, uuid)(df => Seq(df)))
+  // broadcast-hinted, not cached: nothing for eviction to unpersist
+  private val anchorMemo = new SessionMemo[String, DataFrame](_ => Nil)
 
   /** The `vec_id % 25 = 0` probe-anchor batch shared by
     * [[llmHardNegativeMine]] and [[llmKnnLabelProbe]] — built once per
@@ -56,7 +48,7 @@ object LlmOps {
     * the subtree, so it survives the rename projection).
     */
   private def probeAnchors(s: SparkSession, d: String): DataFrame =
-    anchorCache.computeIfAbsent((Tables.sessionKey(s), d), _ => {
+    anchorMemo(s, d) {
       val a0 = Tables.read(s, d, "embeddings")
         .filter(col("vec_id") % 25 === 0)
         .select(col("vec_id").as("anchor_id"), col("embedding").as("a_emb"),
@@ -64,13 +56,9 @@ object LlmOps {
       val budget = 100000L
       if (a0.limit((budget + 1).toInt).count() <= budget) broadcast(a0)
       else a0
-    })
+    }
 
-  private val recallAnchorCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
-
-  Tables.registerEvictor(uuid =>
-    Tables.evictSessionEntries(recallAnchorCache, uuid)(df => Seq(df)))
+  private val recallAnchorMemo = new SessionMemo[(String, Int), DataFrame](_ => Nil)
 
   /** The `vec_id % 50 = 0` bucketed probe-anchor batch of
     * [[llmAnnRecallEval]] — same budget-gated-broadcast pattern as
@@ -82,7 +70,7 @@ object LlmOps {
     // nBits is part of the key: the cached batch's a_bucket values are a
     // function of it, so a second caller with a different plane count
     // must not be served the first caller's buckets
-    recallAnchorCache.computeIfAbsent((Tables.sessionKey(s), d, nBits), _ => {
+    recallAnchorMemo(s, (d, nBits)) {
       org.apache.spark.sql.graft.GraftFunctions.register(s)
       val a0 = Tables.read(s, d, "embeddings")
         .filter(col("vec_id") % 50 === 0)
@@ -92,7 +80,7 @@ object LlmOps {
       val budget = 100000L
       if (a0.limit((budget + 1).toInt).count() <= budget) broadcast(a0)
       else a0
-    })
+    }
 
   /** The `doc_id % 5 = 1` sharded exact-Jaccard τ=0.9 edge list shared by
     * `llm_dedup_keep_best` and the four oracle-checked graph ops —
@@ -102,9 +90,10 @@ object LlmOps {
     * bench/verify sweep.
     */
   def shardedJaccardPairs(s: SparkSession, d: String): DataFrame =
-    shardPairCache.computeIfAbsent((Tables.sessionKey(s), d), _ =>
+    shardPairMemo(s, d) {
       jaccardPairs(s, docTokens(s, d).filter(col("doc_id") % lit(5) === 1))
-        .select(col("id1"), col("id2")).truncated)
+        .select(col("id1"), col("id2")).truncated
+    }
 
   /** Distinct (doc, token) table + k=16 minhash signatures, materialized
     * once per (session, corpus): four registry ops fan out of the token
@@ -112,20 +101,16 @@ object LlmOps {
     * discipline as [[simhashPairs]]. Sharing SIGNATURES between the
     * broadcast and forced-shuffle minhash keys is exactly what the
     * banded key exists to prove: same inputs, different pair-generation
-    * plan, spec-identical output. Keyed by [[Tables.sessionKey]]'s
-    * per-session UUID (a DataFrame-valued map keyed on the session
-    * itself would pin it forever — DataFrames reference their session);
-    * retention is bounded by (sessions × corpora) per JVM, like
-    * `Tables.planCache`.
+    * plan, spec-identical output.
     */
-  private[operators] def corpusToksAndSigs(s: SparkSession, d: String)
+  private[graft] def corpusToksAndSigs(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
-    tokenCache.computeIfAbsent((Tables.sessionKey(s), d), _ => {
+    tokenMemo(s, d) {
       val toks = Tables.read(s, d, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
         .distinct().cache()
       (toks, minhashSigs(toks).cache())
-    })
+    }
 
   private[graft] def docTokens(s: SparkSession, d: String): DataFrame =
     corpusToksAndSigs(s, d)._1
@@ -417,6 +402,27 @@ object LlmOps {
       .orderBy(asc_nulls_first("id1"), asc_nulls_first("id2"))
   }
 
+  /** Doc pairs sharing ≥1 hashed token 3-gram, with their shared-shingle
+    * count `inter` and each side's distinct-shingle count `n1`/`n2` — the
+    * engine under [[llmNgramJaccard]] and [[llmDedupContainment]], which
+    * differ only in the score they compute from those three counts.
+    */
+  private def shinglePairs(s: SparkSession, d: String): DataFrame = {
+    val sh = Tables.read(s, d, "documents")
+      .select(col("doc_id"), split(col("text"), " ").as("t"))
+      .select(col("doc_id"), explode(expr(
+        "transform(sequence(1, size(t) - 2), i -> concat_ws(' ', t[i-1], t[i], t[i+1]))"))
+        .as("sh_raw"))
+      .select(col("doc_id"), xxhash64(col("sh_raw")).as("sh"))
+      .distinct()
+      .cache()
+    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+    val inter = postingPairCounts(sh, "sh", "inter")
+    inter
+      .join(sizes.withColumnRenamed("doc_id", "id1").withColumnRenamed("sz", "n1"), "id1")
+      .join(sizes.withColumnRenamed("doc_id", "id2").withColumnRenamed("sz", "n2"), "id2")
+  }
+
   /** Token-shingle (3-gram) Jaccard near-dup pairs — the n-gram flavor of
     * the exact path; shingles are far more discriminative than unigrams, so
     * the threshold is lower. Shingling via a higher-order transform over the
@@ -429,26 +435,13 @@ object LlmOps {
     */
   val llmNgramJaccard: Q = Q(
     "llm_ngram_jaccard",
-    (s, d) => {
-      val sh = Tables.read(s, d, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("t"))
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(1, size(t) - 2), i -> concat_ws(' ', t[i-1], t[i], t[i+1]))"))
-          .as("sh_raw"))
-        .select(col("doc_id"), xxhash64(col("sh_raw")).as("sh"))
-        .distinct()
-        .cache()
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val inter = postingPairCounts(sh, "sh", "inter")
-      inter
-        .join(sizes.withColumnRenamed("doc_id", "id1").withColumnRenamed("sz", "n1"), "id1")
-        .join(sizes.withColumnRenamed("doc_id", "id2").withColumnRenamed("sz", "n2"), "id2")
+    (s, d) =>
+      shinglePairs(s, d)
         .withColumn("jaccard",
           col("inter").cast(DoubleType) / (col("n1") + col("n2") - col("inter")))
         .filter(col("jaccard") >= 0.04)
         .select(col("id1"), col("id2"), col("inter"), col("n1"), col("n2"), col("jaccard"))
-        .orderBy(asc_nulls_first("id1"), asc_nulls_first("id2"))
-    },
+        .orderBy(asc_nulls_first("id1"), asc_nulls_first("id2")),
     Some("""WITH sh AS (
               SELECT DISTINCT doc_id, unnest(list_transform(
                        range(1, len(string_split(text, ' ')) - 1),
@@ -750,25 +743,21 @@ object LlmOps {
     * (link prediction), NOT for the dedup ops, which stay at the
     * complete ≤3 default.
     */
-  private val simhashPairCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), DataFrame]()
-
-  Tables.registerEvictor(uuid =>
-    Tables.evictSessionEntries(simhashPairCache, uuid)(Seq(_)))
+  private val simhashPairMemo = new SessionMemo[(String, Int), DataFrame](Seq(_))
 
   /** Cached entry point: SIX registry ops consume the pair table
     * (simhash dedup, cluster resolution, the four graph ops), and each
     * recomputing the corpus-scan + hashing subtree is exactly the
     * repeated-shared-subtree shape the scan audit exists to prevent —
     * a production pipeline materializes the pair table once and fans
-    * out. Keyed by the per-session UUID ([[Tables.sessionKey]] — see
-    * [[corpusToksAndSigs]] for why not the session itself) plus
-    * (corpus, radius); the cache holds a lazy `.cache()`d plan, so the
-    * first consumer materializes and the rest read memory.
+    * out. Memoized per (session, corpus, radius); the memo holds a lazy
+    * `.cache()`d plan, so the first consumer materializes and the rest
+    * read memory.
     */
   def simhashPairs(s: SparkSession, d: String, maxHamming: Int = 3): DataFrame =
-    simhashPairCache.computeIfAbsent((Tables.sessionKey(s), d, maxHamming),
-      _ => computeSimhashPairs(s, d, maxHamming).cache())
+    simhashPairMemo(s, (d, maxHamming)) {
+      computeSimhashPairs(s, d, maxHamming).cache()
+    }
 
   private def computeSimhashPairs(s: SparkSession, d: String,
                                   maxHamming: Int): DataFrame = {
@@ -2061,7 +2050,7 @@ object LlmOps {
     */
   private[operators] val IvfCacheMax = 4
   private[operators] val ivfIndexCache =
-    new graft.util.KeyedLazyCache[(Int, String, Int), IvfIndex](
+    new graft.util.KeyedLazyCache[(String, String, Int), IvfIndex](
       IvfCacheMax, retireKeep = IvfCacheMax,
       onRetire = idx =>
         graft.util.TempDirs.deleteRecursively(java.nio.file.Paths.get(idx.path)))
@@ -2075,13 +2064,13 @@ object LlmOps {
     * a stale index (O(#files) metadata-only stats, no data read).
     */
   private[operators] def ivfCacheKey(s: SparkSession, e: DataFrame,
-                                     nLists: Int): (Int, String, Int) = {
+                                     nLists: Int): (String, String, Int) = {
     val hconf = s.sparkContext.hadoopConfiguration
     val stampedFiles = e.inputFiles.sorted.map { f =>
       val p = new org.apache.hadoop.fs.Path(f)
       s"$f@${p.getFileSystem(hconf).getFileStatus(p).getModificationTime}"
     }.mkString(",")
-    (System.identityHashCode(s),
+    (SessionMemo.sessionKey(s),
       stampedFiles + e.queryExecution.analyzed.canonicalized.toString(), nLists)
   }
 
@@ -3988,38 +3977,26 @@ object LlmOps {
     * Jaccard (union is dominated by the long doc) but containment
     * |A∩B|/min(|A|,|B|) ≈ 1, which is exactly the quote/boilerplate/
     * excerpt duplication a pretraining corpus needs caught. Same
-    * 3-gram-shingle engine as [[llmNgramJaccard]] (shingles collapse to
-    * xxhash64 longs before the distinct and the inverted-index self-join,
-    * so the corpus-wide shuffle carries fixed 8-byte keys; the oracle
-    * computes on raw strings — a cross-shingle collision perturbs one
-    * count with probability ~2⁻⁶⁴); only the denominator changes. The
-    * shared shingle plan materializes once via cache, the candidate set
-    * is bounded by shared-shingle density, and the threshold test is one
-    * IEEE division on identical operands in both engines.
+    * 3-gram-shingle engine ([[shinglePairs]]) as [[llmNgramJaccard]]
+    * (shingles collapse to xxhash64 longs before the distinct and the
+    * inverted-index self-join, so the corpus-wide shuffle carries fixed
+    * 8-byte keys; the oracle computes on raw strings — a cross-shingle
+    * collision perturbs one count with probability ~2⁻⁶⁴); only the
+    * denominator changes. The shared shingle plan materializes once via
+    * cache, the candidate set is bounded by shared-shingle density, and
+    * the threshold test is one IEEE division on identical operands in
+    * both engines.
     */
   val llmDedupContainment: Q = Q(
     "llm_dedup_containment",
-    (s, d) => {
-      val sh = Tables.read(s, d, "documents")
-        .select(col("doc_id"), split(col("text"), " ").as("t"))
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(1, size(t) - 2), i -> concat_ws(' ', t[i-1], t[i], t[i+1]))"))
-          .as("sh_raw"))
-        .select(col("doc_id"), xxhash64(col("sh_raw")).as("sh"))
-        .distinct()
-        .cache()
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val inter = postingPairCounts(sh, "sh", "inter")
-      inter
-        .join(sizes.withColumnRenamed("doc_id", "id1").withColumnRenamed("sz", "n1"), "id1")
-        .join(sizes.withColumnRenamed("doc_id", "id2").withColumnRenamed("sz", "n2"), "id2")
+    (s, d) =>
+      shinglePairs(s, d)
         .withColumn("containment",
           col("inter").cast(DoubleType) / least(col("n1"), col("n2")))
         .filter(col("containment") >= 0.08)
         .select(col("id1"), col("id2"), col("inter"), col("n1"), col("n2"),
           col("containment"))
-        .orderBy(asc_nulls_first("id1"), asc_nulls_first("id2"))
-    },
+        .orderBy(asc_nulls_first("id1"), asc_nulls_first("id2")),
     Some("""WITH sh AS (
               SELECT DISTINCT doc_id, unnest(list_transform(
                        range(1, len(string_split(text, ' ')) - 1),

@@ -72,9 +72,12 @@ object CdcEnvelope {
     * a reason tag, ready for a dead-letter sink. Null wire values are
     * tombstones and are silently dropped from both legs (reference
     * `transforms.unwrap.drop.tombstones=true`, `setup.sh:107`). `from_json`
-    * is a codegen'd expression evaluated once per row; the two legs are
-    * filtered projections of the same decoded plan (in `foreachBatch` the
-    * batch is already materialized, so no double scan of the source).
+    * is a codegen'd expression evaluated once per row of each leg; the two
+    * legs are filtered projections of the same decoded plan, NOT of a
+    * materialized batch: each action on a `foreachBatch` DataFrame
+    * re-executes its plan, so writing both legs runs the source scan and
+    * the decode twice (perfbench's `cdc_upsert` measures it). Callers that
+    * want one scan must persist the batch before splitting it.
     */
   def unwrapTolerant(df: DataFrame, jsonCol: Column, payload: StructType,
                      microTsCols: Seq[String] = Seq.empty)

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions.{col, from_json}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.util.SessionMemo
+
 /** Utilities to run a Structured Streaming pipeline to completion over the
   * finite test corpus and hand back its result as a batch DataFrame.
   *
@@ -26,16 +28,11 @@ object StreamRunner {
   private val sourceDirs =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
-  /** Weak-keyed: a stopped-and-dropped parent session (multi-suite test
-    * JVMs stop and recreate sessions) must not be pinned forever by this
-    * cache — WeakHashMap lets the (parent → tuned child) pair be collected
-    * with the parent. The child holds no reference back to the parent
-    * (only the shared SparkContext), so the value never pins its key.
-    * Collections.synchronizedMap gives atomic computeIfAbsent.
+  /** Parent session → tuned child. The child holds no reference back to
+    * the parent (only the shared SparkContext), so the memo never pins a
+    * dead parent; its entry is evicted with the parent's other entries.
     */
-  private val tunedSessions: java.util.Map[SparkSession, SparkSession] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, SparkSession]())
+  private val tunedSessions = new SessionMemo[Unit, SparkSession](_ => Nil)
 
   /** Streaming queries run on a child session whose shuffle-partition count
     * — which for a stateful op is the number of state-store instances it
@@ -47,8 +44,8 @@ object StreamRunner {
     * needs (the parquet nanosAsLong flag) are applied by passing the child
     * itself to `Tables.read`.
     */
-  private[streaming] def tunedSession(spark: SparkSession): SparkSession =
-    tunedSessions.computeIfAbsent(spark, s => {
+  private[graft] def tunedSession(s: SparkSession): SparkSession =
+    tunedSessions(s, ()) {
       val child = s.newSession()
       val parent = s.conf.get("spark.sql.shuffle.partitions", "8").toInt
       child.conf.set("spark.sql.shuffle.partitions", math.min(8, parent).toString)
@@ -87,7 +84,7 @@ object StreamRunner {
             == "org.apache.hadoop.fs.local.LocalFs")
         hc.set(fsKey, "org.apache.hadoop.fs.local.RawLocalFs")
       child
-    })
+    }
 
   /** Stream a corpus parquet table. File streaming needs an explicit schema,
     * so the batch reader supplies it (also triggering the `events`

@@ -11,6 +11,7 @@ import org.apache.spark.sql.types._
 
 import graft.{Q, Tables}
 import graft.operators.Upsert
+import graft.util.SessionMemo
 
 /** SURVEY §2.7 — Structured Streaming.
   *
@@ -535,27 +536,21 @@ object StreamingOps {
     * streaming queries pays the micro-batch + state-store setup floor
     * three times for identical join state; this is the streaming
     * counterpart of the batch shared-subtree materialization
-    * (`Checkpoints.truncated`), keyed per (session UUID, corpus) —
-    * [[graft.Tables.sessionKey]]'s indirection, since a DataFrame-valued
-    * map keyed on the session itself would pin it forever — so
-    * Verify/Bench reuse it; retention is (sessions × corpora)-bounded.
-    * Each registered key still hash-checks against its OWN batch oracle,
-    * so the shared run is verified three ways; the per-type streaming
-    * engines remain real and spec-pinned via [[streamStreamJoinFrames]] /
-    * [[streamStreamOuterFrames]] (StreamingSpec runs them directly).
+    * (`Checkpoints.truncated`), memoized per (session, corpus) so
+    * Verify/Bench reuse it. Each registered key still hash-checks against
+    * its OWN batch oracle, so the shared run is verified three ways; the
+    * per-type streaming engines remain real and spec-pinned via
+    * [[streamStreamJoinFrames]] / [[streamStreamOuterFrames]]
+    * (StreamingSpec runs them directly).
     */
-  private val joinFamilyCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  graft.Tables.registerEvictor(uuid =>
-    graft.Tables.evictSessionEntries(joinFamilyCache, uuid)(Seq(_)))
+  private val joinFamilyMemo = new SessionMemo[String, DataFrame](Seq(_))
 
   private def joinFamily(s: SparkSession, d: String): DataFrame =
-    joinFamilyCache.computeIfAbsent((graft.Tables.sessionKey(s), d), _ => {
+    joinFamilyMemo(s, d) {
       val df = streamStreamOuterFrames(s, d, "full_outer", 2, None).cache()
       df.count() // materialize the family run once
       df
-    })
+    }
 
   val streamStreamJoin: Q = Q(
     "stream_stream_join",
@@ -682,22 +677,21 @@ object StreamingOps {
     * resolution cutoff applies per side — a null-signup row needs the
     * click's window resolved, a null-click row the signup's — and the
     * batch FULL JOIN oracle applies the identical two-sided predicate.
-    */
-  /** Deliberately NOT served from the cache: the full outer IS the family
+    *
+    * Deliberately NOT served from the memo: the full outer IS the family
     * run, and keeping it live means the bench's min-of-reps still measures
     * a real streaming-join execution for the family (the inner/left keys
     * are projections — serving THEM from the shared run is the r5-style
     * setup sharing; serving all three would leave the bench blind to a
-    * streaming-join regression). Each execution refreshes the cache for
-    * the projection keys.
+    * streaming-join regression). Each execution replaces the memoized run
+    * for the projection keys.
     */
   val streamStreamFullOuter: Q = Q(
     "stream_stream_full_outer",
     (s, d) => {
       val df = streamStreamOuterFrames(s, d, "full_outer", 2, None).cache()
       df.count()
-      val old = joinFamilyCache.put((graft.Tables.sessionKey(s), d), df)
-      if (old != null && (old ne df)) old.unpersist(false)
+      joinFamilyMemo.replace(s, d, df)
       df.orderBy(asc_nulls_first("click_id"), asc_nulls_first("signup_id"))
     },
     Some("""WITH c AS (SELECT event_id AS click_id, user_id, epoch_us(ts) AS t

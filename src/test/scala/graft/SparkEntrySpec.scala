@@ -33,6 +33,40 @@ class SparkEntrySpec extends SparkSpec {
     assert(b.sparkSession eq sibling, "cached plan must belong to its own session")
   }
 
+  test("SessionMemo.evict drops a session's entries and unpersists only what the memos cached") {
+    import org.apache.spark.storage.StorageLevel.NONE
+    import graft.operators.LlmOps
+    import graft.streaming.StreamRunner
+    import graft.util.{SessionMemo, TempDirs}
+    // a corpus no other spec caches, so no other cache entry can match
+    val dir = TempDirs.create("memo_evict").toString
+    Tables.read(spark, sf, "documents").limit(20).write.parquet(s"$dir/documents.parquet")
+    val sibling = spark.newSession()
+    val plan = Tables.read(sibling, dir, "documents")
+    val (toks, sigs) = LlmOps.corpusToksAndSigs(sibling, dir)
+    val tuned = StreamRunner.tunedSession(sibling)
+    // the live session caches a plan equal to the sibling's uncached memo
+    // plan — unpersisting that plan at eviction would drop this entry
+    val livePlan = Tables.read(spark, dir, "documents").cache()
+    val liveToks = LlmOps.docTokens(spark, sf)
+    assert(toks.storageLevel != NONE && sigs.storageLevel != NONE)
+
+    SessionMemo.evict(SessionMemo.sessionKey(sibling))
+
+    assert(toks.storageLevel == NONE && sigs.storageLevel == NONE,
+      "the evicted session's cached token tables must be unpersisted")
+    assert(livePlan.storageLevel != NONE && liveToks.storageLevel != NONE,
+      "the live session's cached data must survive")
+    assert(Tables.read(spark, dir, "documents") eq livePlan)
+    assert(LlmOps.docTokens(spark, sf) eq liveToks)
+    // the evicted session's entries are gone: each lookup rebuilds
+    assert(!(Tables.read(sibling, dir, "documents") eq plan))
+    assert(!(LlmOps.corpusToksAndSigs(sibling, dir)._1 eq toks))
+    assert(!(StreamRunner.tunedSession(sibling) eq tuned))
+    SessionMemo.evict(SessionMemo.sessionKey(sibling))
+    livePlan.unpersist()
+  }
+
   test("Scale.keyOffset names the table when it is empty; max+1 otherwise") {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val empty = spark.createDataFrame(

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.graft.GraftFunctions
+import org.apache.spark.sql.graft.{FunctionNames, GraftFunctions}
 
 import graft.SparkSpec
 
@@ -42,7 +41,10 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("GraftExtensions wires the function injections without error") {
-    new graft.GraftExtensions().apply(new SparkSessionExtensions())
+    // both entry points install the same functions
+    val injected = FunctionNames.injected(new graft.GraftExtensions())
+    assert(injected == FunctionNames.registered(spark))
+    assert(injected.contains("graft_bloom_agg"), injected)
   }
 
   test("graft_lsh_bucket equals VectorMath.lshBucket bit-for-bit, UDF-free plan") {
